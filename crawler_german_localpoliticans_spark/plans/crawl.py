@@ -8,7 +8,10 @@ state (SURVEY.md §3.1 "Spark rebuild lifecycle"):
       ─ politeness schedule (host partitioning, priority order, rate caps)
       ─ join pages on url (the offline "fetch", BASELINE input_hint)
       ─ found_links pandas UDF ─ keyword gate (Column expr)
-      ─ clean/extract pandas UDFs ─ posexplode candidates
+      ─ fetched(round r) write, the keyword-gated rows' clean/extract
+        pandas UDFs in the same pass (the round's one output table;
+        `extracted` is a projection of it)
+      ─ posexplode candidates
       ─ first-discovery-wins dedup (min (parent_seq, pos) struct)
       ─ bloom prefilter ─ exact anti-join vs url_seen
       ─ global seq assignment ─ commit round (checkpoint line)
@@ -286,12 +289,20 @@ class CrawlDriver:
         )
         wave.persist()
 
-        # 4. fetched table rows for the whole wave; wave counters ride along
-        #    as observed metrics on the write job (no second pass)
+        # 4. the round's one output table: fetched rows for the whole wave,
+        #    with the keyword-gated pages' clean_html/text/custom_id
+        #    (src/main.rs:824) in the same Arrow pass; wave counters ride
+        #    along as observed metrics on the write job (no second pass).
+        #    An Arrow UDF sees every row of a batch even under a CASE WHEN,
+        #    so the other rows pass a null html and cost nothing
         from pyspark.sql import Observation
 
+        extract = F.col("ok") & F.col("keyword_hit")
+
         def fetched_select(df):
-            return df.select(
+            return df.withColumn(
+                "ce", udfs.clean_extract(F.when(extract, F.col("html")))
+            ).select(
                 "seq",
                 "url",
                 "depth",
@@ -300,6 +311,9 @@ class CrawlDriver:
                 "keyword_hit",
                 "robots_blocked",
                 "fetch_failed",
+                F.when(extract, F.col("ce.clean_html")).alias("clean_html"),
+                F.when(extract, F.col("ce.text")).alias("text"),
+                udfs.custom_id_from_url(F.when(extract, F.col("url"))).alias("custom_id"),
             )
 
         wave_aggs = [
@@ -317,40 +331,20 @@ class CrawlDriver:
             # sequential slice materialization: slice s's fetch work runs
             # (and lands in the round dir) before slice s+1 starts —
             # robots-blocked rows (never fetched) ride with slice 0
-            n_slices = wave.agg(F.max("slice")).collect()[0][0]
-            n_slices = int(n_slices) if n_slices is not None else 0
+            stats = wave.agg(*wave_aggs).collect()[0]
+            n_slices = (stats["max_slice"] or 0) + 1
             slice_col = F.coalesce(F.col("slice"), F.lit(0))
             cat.write_round_parts(
                 "fetched",
                 r,
-                [fetched_select(wave.where(slice_col == s)) for s in range(n_slices + 1)],
+                [fetched_select(wave.where(slice_col == s)) for s in range(n_slices)],
             )
-            stats = wave.agg(*wave_aggs).collect()[0]
         else:
             obs = Observation(f"wave-{r}")
             cat.write_round("fetched", r, fetched_select(wave.observe(obs, *wave_aggs)))
             stats = None  # resolved below after the write ran
 
-        # 5. extraction stage: keyword-gated fetched pages only
-        #    (src/main.rs:824); clean_html + text in one pandas UDF.
-        #    NOTE (r6): overlapping this write with the expansion jobs on a
-        #    driver thread (guide §2.6) was tried and measured SLOWER here
-        #    (+0.7-1.3s/round): the round's jobs are latency-bound driver
-        #    round trips, and the extraction job occupying every executor
-        #    slot delays each of them — receipt in BENCH/NOTES.md r6.
-        extracted = (
-            wave.where(F.col("ok") & F.col("keyword_hit"))
-            .withColumn("ce", udfs.clean_extract(F.col("html")))
-            .select(
-                "url",
-                F.col("ce.clean_html").alias("clean_html"),
-                F.col("ce.text").alias("text"),
-                udfs.custom_id_from_url(F.col("url")).alias("custom_id"),
-            )
-        )
-        cat.write_round("extracted", r, extracted)
-
-        # 6. wave counters + politeness metrics (observed on the write job,
+        # 5. wave counters + politeness metrics (observed on the write job,
         #    or aggregated once in slice-execution mode)
         if stats is None:
             stats = obs.get
@@ -370,7 +364,7 @@ class CrawlDriver:
             },
         )
 
-        # 7. expansion (depth cutoff: children of pages AT max_depth are not
+        # 6. expansion (depth cutoff: children of pages AT max_depth are not
         #    enqueued, src/main.rs:939-941). NOTE (r6): suspending AQE for
         #    the expansion's three tiny actions (to cut its per-stage
         #    materialization round trips) was tried and measured SLOWER —
@@ -469,10 +463,9 @@ class CrawlDriver:
         metrics["bloom_version"] = new_bloom_version
         metrics["wall_s"] = round(time.monotonic() - t0, 3)
         metrics["lineage"] = {
-            t: partition_lineage(cat.round_dir(t, r))
-            for t in ("fetched", "extracted")
+            "fetched": partition_lineage(cat.round_dir("fetched", r)),
+            "frontier_next": partition_lineage(cat.round_dir("frontier", r + 1)),
         }
-        metrics["lineage"]["frontier_next"] = partition_lineage(cat.round_dir("frontier", r + 1))
 
         wave.unpersist()
         return metrics
@@ -490,8 +483,7 @@ class CrawlDriver:
             entry = self.checkpoints.last_entry()
             next_seq = entry["next_seq"]
             bloom_version = entry["bloom_version"]
-            for t in ("fetched", "extracted"):
-                cat.drop_rounds_after(t, last)
+            cat.drop_rounds_after("fetched", last)
             cat.drop_rounds_after("frontier", last + 1)
             self.bloom.drop_versions_after(bloom_version)
             start_round = last + 1
@@ -499,7 +491,7 @@ class CrawlDriver:
             if seeds_df is None:
                 raise ValueError("seeds_df required for a fresh run")
             self.checkpoints.reset()
-            for t in ("frontier", "fetched", "extracted"):
+            for t in ("frontier", "fetched"):
                 cat.drop_rounds_after(t, -1)
             self.bloom.drop_versions_after(-1)
             frontier0, n_seeds = self._seed_frontier(seeds_df)
@@ -537,10 +529,16 @@ class CrawlDriver:
         url_seen = with_hashes(
             frontier.select("url").distinct(), "url", self.config.seen_partitions
         ).select("url", "h1", "h2", "part")
+        # extracted == the keyword-gated fetched pages' extraction columns;
+        # a projection of the one table each round writes
+        fetched = self.catalog.read_rounds("fetched", rounds, tbl.FETCHED_SCHEMA)
+        extracted = fetched.where(
+            F.col("keyword_hit") & ~F.col("robots_blocked") & ~F.col("fetch_failed")
+        ).select("url", "clean_html", "text", "custom_id")
         return CrawlTables(
-            fetched=self.catalog.read_rounds("fetched", rounds, tbl.FETCHED_SCHEMA),
+            fetched=fetched,
             url_seen=url_seen,
-            extracted=self.catalog.read_rounds("extracted", rounds, tbl.EXTRACTED_SCHEMA),
+            extracted=extracted,
             frontier=frontier,
             metrics=metrics or self.checkpoints.entries(),
         )

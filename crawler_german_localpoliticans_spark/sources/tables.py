@@ -44,8 +44,6 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-SEEDS_SCHEMA = T.StructType([T.StructField("Websites", T.StringType())])
-
 ROBOTS_SCHEMA = T.StructType(
     [
         T.StructField("host_key", T.StringType()),
@@ -64,15 +62,6 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-URL_SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("h1", T.LongType(), False),  # xxhash64(url)
-        T.StructField("h2", T.LongType(), False),  # independent second hash
-        T.StructField("part", T.IntegerType(), False),  # pmod(h1, seen_partitions)
-    ]
-)
-
 FETCHED_SCHEMA = T.StructType(
     [
         T.StructField("seq", T.LongType(), False),
@@ -83,28 +72,10 @@ FETCHED_SCHEMA = T.StructType(
         T.StructField("keyword_hit", T.BooleanType(), False),
         T.StructField("robots_blocked", T.BooleanType(), False),
         T.StructField("fetch_failed", T.BooleanType(), False),
-    ]
-)
-
-EXTRACTED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
+        # extraction columns: non-null exactly on ok ∧ keyword_hit rows
         T.StructField("clean_html", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("custom_id", T.StringType()),
-    ]
-)
-
-COUNCIL_MEMBERS_SCHEMA = T.StructType(
-    [
-        T.StructField("unique_key", T.StringType(), False),
-        T.StructField("full_name", T.StringType(), False),
-        T.StructField("party", T.StringType()),
-        T.StructField("municipality", T.StringType(), False),
-        T.StructField("roles", T.ArrayType(T.StringType())),
-        T.StructField("source_file", T.StringType()),
-        T.StructField("raw_json", T.StringType()),
-        T.StructField("updated_at", T.TimestampType()),
     ]
 )
 

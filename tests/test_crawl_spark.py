@@ -5,7 +5,10 @@ byte-identical extracted text per url)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.sql import functions as F
 
 from crawler_german_localpoliticans_spark.config import CrawlConfig
 from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
@@ -61,6 +64,14 @@ def assert_exact_match(tables, oracle_res):
     }
     assert engine_ext == oracle_ext
 
+    # the projection's invariant: fetched carries extraction columns on
+    # exactly the ok ∧ keyword_hit rows
+    ok_hit = F.col("keyword_hit") & ~F.col("robots_blocked") & ~F.col("fetch_failed")
+    mismatched = tables.fetched.where(
+        ok_hit != (F.col("clean_html").isNotNull() & F.col("custom_id").isNotNull())
+    )
+    assert mismatched.count() == 0
+
 
 @pytest.mark.parametrize("use_bloom", [True, False])
 def test_smoke_exact_match(spark, smoke_fixture, smoke_dir, tmp_path, use_bloom):
@@ -97,6 +108,7 @@ def test_politeness_slicing_does_not_change_results(spark, smoke_fixture, smoke_
     assert_exact_match(tables, oracle_res)
     # the schedule itself honored the cap
     assert all(m["politeness"]["slices"] >= 1 for m in tables.metrics)
+    assert not os.path.exists(os.path.join(str(tmp_path), "extracted"))
 
 
 def test_dedup_idempotent_rerun(spark, smoke_fixture, smoke_dir, tmp_path):
@@ -118,4 +130,7 @@ def test_metrics_recorded(spark, smoke_dir, tmp_path):
     for m in tables.metrics:
         assert m["scheduled"] > 0
         assert "lineage" in m and "politeness" in m
+        assert set(m["lineage"]) == {"fetched", "frontier_next"}
         assert m["wall_s"] >= 0
+    # one output table per round: extracted is a projection of fetched
+    assert not os.path.exists(os.path.join(str(tmp_path), "extracted"))

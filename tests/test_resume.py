@@ -55,13 +55,17 @@ def test_kill_after_round0_resume_exact(spark, smoke_dir, tmp_path):
         os.remove(os.path.join(fetched_r1, name))
     # and an orphaned temp dir from a write that never finished
     shutil.copytree(
-        os.path.join(kill_dir, "extracted", "round=000001"),
-        os.path.join(kill_dir, "extracted", "round=000002.tmp-dead"),
+        os.path.join(kill_dir, "fetched", "round=000001"),
+        os.path.join(kill_dir, "fetched", "round=000002.tmp-dead"),
     )
 
     d2 = CrawlDriver(spark, kill_dir, f"{smoke_dir}/pages.parquet", robots, config)
     resumed = d2.run(resume=True)
     assert collect_tables(resumed) == expected
+    debris = [n for t in ("fetched", "frontier") for n in os.listdir(os.path.join(kill_dir, t))
+              if ".tmp-" in n]
+    assert debris == []
+    assert not os.path.exists(os.path.join(kill_dir, "extracted"))
 
     # checkpoint log is complete again and lineage re-recorded
     with open(ckpt) as f:
