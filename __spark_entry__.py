@@ -2,7 +2,7 @@
 
 entry(spark)   — flagship iterative crawl over a corpus derived from
                  /root/testdata/sf0.001 (BFS frontier, robots, politeness,
-                 bloom+anti-join dedup, extraction).
+                 scale-gated bloom + exact anti-join dedup, extraction).
 queries()      — one entry per implemented operator family (SURVEY.md §2 +
                  the training-data extensions); each callable
                  (spark, sf_dir) -> DataFrame.
@@ -94,7 +94,8 @@ def _e6(col) -> F.Column:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: iterative BFS crawl (frontier, robots broadcast state,
-    politeness schedule, bloom-prefiltered exact dedup, deterministic
+    politeness schedule, exact anti-join dedup (bloom-prefiltered once
+    url_seen outgrows broadcast), deterministic
     (depth, seq) order, pandas-UDF extraction) over the corpus derived from
     sf0.001 documents."""
     from crawler_german_localpoliticans_spark.sources.webcorpus import run_flagship_crawl

@@ -37,7 +37,6 @@ class CrawlConfig:
     broadcast_policies_max_hosts: int = 1_000_000
     bloom_capacity_per_partition: int = 1 << 17
     bloom_fpp: float = 0.01
-    use_bloom_prefilter: bool = True
     # politeness wave-slicing: when >0, each BFS depth wave is fetched in
     # slices capped at ceil(slice_budget_ms / effective_delay_ms) pages per
     # host per slice; expansion is committed only once the whole wave is

@@ -22,8 +22,17 @@ Design (scale posture first):
   double hashing). False positives go to the exact anti-join; false
   negatives are impossible as long as version K covers everything inserted
   before the test — the crawl driver guarantees bloom(v=r) ⊇ url_seen at
-  round r's expansion (seeds inserted during round 0, children of round r
-  inserted as v=r+1).
+  every round r whose expansion probes (children of round r inserted as
+  v=r+1).
+- Scale gate (plans/crawl.py `_bloom_live`): the sidecar only pays once
+  url_seen is too big for AQE to broadcast into the exact anti-join, so
+  the driver neither probes nor inserts below that size. The first live
+  round r builds version r from url_seen(0..r) in one insert; a crawl
+  that never crosses the threshold never writes a version at all.
+- A version that was never built (or was dropped by
+  `drop_versions_after`) answers maybe_seen for every key, so a probe of
+  it can only send rows to the exact anti-join. Inside a built version, a
+  missing part file means that partition had no inserts: definitely new.
 - Partitions untouched by an insertion round are carried forward by
   hard-linking the previous version's file (a manifest table would replace
   this on object storage).
@@ -195,7 +204,8 @@ class BloomSidecar:
     # -- membership prefilter -------------------------------------------------
     def prefilter(self, candidates: DataFrame, version: int) -> DataFrame:
         """Add `maybe_seen`: False rows are *definitely* not in url_seen (no
-        false negatives) and may skip the exact anti-join."""
+        false negatives) and may skip the exact anti-join. Every row of an
+        unbuilt `version` is maybe_seen."""
         m, k = self.m, self.k
         vdir = self._vdir(version)
         out_schema = T.StructType(
@@ -204,6 +214,9 @@ class BloomSidecar:
         columns = candidates.columns
 
         def test(pdf: pd.DataFrame) -> pd.DataFrame:
+            if not os.path.isdir(vdir):
+                pdf["maybe_seen"] = True
+                return pdf
             part = int(pdf["part"].iloc[0])
             f = os.path.join(vdir, f"part-{part}.npy")
             if not os.path.exists(f):

@@ -13,7 +13,8 @@ state (SURVEY.md §3.1 "Spark rebuild lifecycle"):
         `extracted` is a projection of it)
       ─ posexplode candidates
       ─ first-discovery-wins dedup (min (parent_seq, pos) struct)
-      ─ bloom prefilter ─ exact anti-join vs url_seen
+      ─ [bloom prefilter, once url_seen outgrows broadcast]
+      ─ exact anti-join vs url_seen
       ─ global seq assignment ─ commit round (checkpoint line)
 
 Determinism / parity invariants (tests/test_crawl_spark.py asserts all of
@@ -38,7 +39,13 @@ Scale posture (local[32] here, 1000 executors at 10^10 URLs):
   production scale `pages` is bucketed by url so the join is shuffle-free
   on the pages side; AQE handles candidate skew;
 - the anti-join is keyed on the canonical URL (uniform by construction);
-  the bloom sidecar keeps definite-new rows out of it entirely;
+  the bloom sidecar keeps definite-new rows out of it entirely — but only
+  once it can save that join anything. While `next_seq` (an exact upper
+  bound on |url_seen|) × SEEN_BYTES_PER_URL fits under the session's
+  broadcast threshold, AQE broadcasts url_seen into the anti-join and the
+  bloom is neither probed nor maintained. The first round past the
+  threshold builds bloom version r from url_seen(0..r) once; every later
+  round probes and inserts (arithmetic in SCALE.md);
 - no collect() on data paths — only tiny aggregates (counts, bucket
   offsets, robots policies) reach the driver.
 """
@@ -46,6 +53,7 @@ Scale posture (local[32] here, 1000 executors at 10^10 URLs):
 from __future__ import annotations
 
 import os
+import re
 import time
 from dataclasses import dataclass, field
 
@@ -62,6 +70,41 @@ from .bloom import BloomSidecar, with_hashes
 from .checkpoint import CheckpointLog, partition_lineage
 from .ordering import assign_global_seq_counted
 from .politeness import schedule_wave
+
+
+#: bytes one url_seen row adds to the anti-join's build side as AQE measures
+#: it: an UnsafeRow of one string column is an 8-byte null bitset plus an
+#: 8-byte offset/length word plus the URL padded to whole words (~80 bytes
+#: for canonical municipal URLs). Sizing in SCALE.md.
+SEEN_BYTES_PER_URL = 96
+
+_BYTE_UNITS = {
+    "": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
+    "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50,
+}
+
+
+def parse_byte_size(value: str) -> int:
+    """Spark's byte-size conf syntax: an integer with an optional binary unit
+    (`10MB`, `10485760b`, `512k`), case-insensitive; a leading `-` negates
+    (`-1` turns broadcasting off)."""
+    text = value.strip().lower()
+    if text.startswith("-"):
+        return -parse_byte_size(text[1:])
+    m = re.fullmatch(r"(\d+)([a-z]*)", text)
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The threshold AQE applies when it turns a join into a broadcast at
+    runtime: `spark.sql.adaptive.autoBroadcastJoinThreshold`, falling back to
+    `spark.sql.autoBroadcastJoinThreshold`. ≤ 0 means never broadcast."""
+    raw = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None)
+    if raw is None:
+        raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    return parse_byte_size(raw)
 
 
 @dataclass
@@ -216,6 +259,14 @@ class CrawlDriver:
         self.policies_df = parse_policies_df(robots_df, config).persist()
         n_policy_hosts = self.policies_df.count()
         self.broadcast_policies = n_policy_hosts <= config.broadcast_policies_max_hosts
+
+    def _bloom_live(self, next_seq: int) -> bool:
+        """Whether an expansion with `next_seq` URLs sequenced so far probes
+        and maintains the bloom. `next_seq` bounds |url_seen| from above, so
+        below the broadcast threshold AQE broadcasts url_seen into the exact
+        anti-join and a prefilter would save that join nothing."""
+        threshold = broadcast_threshold(self.spark)
+        return threshold <= 0 or next_seq * SEEN_BYTES_PER_URL > threshold
 
     # ------------------------------------------------------------------ seeds
     def _seed_frontier(self, seeds_df: DataFrame) -> tuple[DataFrame, int]:
@@ -373,6 +424,7 @@ class CrawlDriver:
         #    joins that cost more than the saved scheduling latency.
         enqueued = 0
         new_bloom_version = bloom_version
+        bloom_live = bloom_built = False
         if r < cfg.max_depth:
             candidates = wave.where(F.col("ok")).select(
                 F.col("seq").alias("parent_seq"),
@@ -390,13 +442,24 @@ class CrawlDriver:
                     F.col("first.pos").alias("pos"),
                 )
             )
-            first = with_hashes(first, "url", cfg.seen_partitions)
-            if cfg.use_bloom_prefilter:
-                pref = self.bloom.prefilter(first, bloom_version)
+            # url_seen IS distinct(frontier.url) over rounds 0..r — no
+            # separate table to maintain; column pruning reads only the url
+            # column from the frontier round dirs
+            seen = cat.read_rounds("frontier", list(range(r + 1)), tbl.FRONTIER_SCHEMA).select("url")
+            # the bloom keeps the invariant "version r ≡ url_seen of
+            # frontier rounds 0..r"; the first live round (or a resume that
+            # crosses the threshold) builds version r from url_seen once
+            bloom_live = self._bloom_live(next_seq)
+            bloom_built = bloom_live and bloom_version != r
+            if bloom_built:
+                seen_r = with_hashes(seen.distinct(), "url", cfg.seen_partitions)
+                self.bloom.insert(seen_r.select("part", "h1", "h2"), None, r)
+            if bloom_live:
+                first = with_hashes(first, "url", cfg.seen_partitions)
+                pref = self.bloom.prefilter(first, r)
                 definite_new = pref.where(~F.col("maybe_seen")).drop("maybe_seen")
                 maybe = pref.where(F.col("maybe_seen")).drop("maybe_seen")
             else:
-                definite_new = first.where(F.lit(False))
                 maybe = first
 
             if r == 0:
@@ -419,15 +482,11 @@ class CrawlDriver:
             else:
                 # rounds ≥ 1: every queued URL was visited-set-added at its
                 # enqueue (the Lua script, src/main.rs:30-45), so the exact
-                # anti-join against url_seen is the precise semantics.
-                # url_seen IS distinct(frontier.url) over rounds 0..r — no
-                # separate table to maintain; column pruning reads only the
-                # url column from the frontier round dirs
-                seen = cat.read_rounds("frontier", list(range(r + 1)), tbl.FRONTIER_SCHEMA)
-                survivors = maybe.join(seen.select("url"), on="url", how="left_anti")
-            # the dedup chain (prefilter + anti-join) feeds three consumers
-            # (seq bounds, bucket counts, frontier write) — persist it once
-            pre_seq = definite_new.unionByName(survivors).persist()
+                # anti-join against url_seen is the precise semantics
+                survivors = maybe.join(seen, on="url", how="left_anti")
+            # the dedup chain feeds three consumers (seq bounds, bucket
+            # counts, frontier write) — persist it once
+            pre_seq = (definite_new.unionByName(survivors) if bloom_live else survivors).persist()
             # parent_seq ∈ [0, next_seq) by construction (parents are
             # already-sequenced rows), so the bucket-range scan is free
             new_urls, enqueued = assign_global_seq_counted(
@@ -443,24 +502,25 @@ class CrawlDriver:
                 F.lit(r + 1).cast("int").alias("depth"),
                 udfs.url_host(F.col("url")).alias("host"),
                 udfs.host_key(F.col("url")).alias("host_key"),
-                "h1",
-                "h2",
-                "part",
+                *(["h1", "h2", "part"] if bloom_live else []),
             )
-            next_frontier.persist()
+            new_bloom_version = r + 1 if bloom_live else -1
+            if bloom_live:
+                # two consumers: the frontier write and the bloom insert
+                next_frontier.persist()
             cat.write_round(
                 "frontier", r + 1, next_frontier.select(*[f.name for f in tbl.FRONTIER_SCHEMA])
             )
-            new_bloom_version = bloom_version + 1
-            self.bloom.insert(
-                next_frontier.select("part", "h1", "h2"), bloom_version, new_bloom_version
-            )
-            next_frontier.unpersist()
+            if bloom_live:
+                self.bloom.insert(next_frontier.select("part", "h1", "h2"), r, new_bloom_version)
+                next_frontier.unpersist()
             pre_seq.unpersist()
 
         metrics["enqueued"] = enqueued
         metrics["next_seq"] = next_seq + enqueued
         metrics["bloom_version"] = new_bloom_version
+        metrics["bloom_probed"] = bloom_live
+        metrics["bloom_built"] = bloom_built
         metrics["wall_s"] = round(time.monotonic() - t0, 3)
         metrics["lineage"] = {
             "fetched": partition_lineage(cat.round_dir("fetched", r)),
@@ -495,15 +555,9 @@ class CrawlDriver:
                 cat.drop_rounds_after(t, -1)
             self.bloom.drop_versions_after(-1)
             frontier0, n_seeds = self._seed_frontier(seeds_df)
-            frontier0.persist()
             cat.write_round("frontier", 0, frontier0)
-            seen0 = with_hashes(
-                frontier0.select("url").distinct(), "url", cfg.seen_partitions
-            )
-            self.bloom.insert(seen0.select("part", "h1", "h2"), None, 0)
-            frontier0.unpersist()
             next_seq = n_seeds
-            bloom_version = 0
+            bloom_version = -1  # never built; a live round 0 builds v=0
             start_round = 0
 
         all_metrics: list[dict] = []

@@ -26,6 +26,21 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def set_broadcast_threshold(spark):
+    """Setter for the broadcast threshold the crawl's bloom gate reads; the
+    session's previous value comes back however the test ends."""
+    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key, None)
+    try:
+        yield lambda value: spark.conf.set(key, value)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def smoke_fixture():
     from crawler_german_localpoliticans_spark import fixtures

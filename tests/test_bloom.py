@@ -48,3 +48,23 @@ def test_version_carry_forward_is_cumulative(spark, tmp_path):
     both = a.unionByName(b)
     misses = bloom.prefilter(both, 1).where(~F.col("maybe_seen")).count()
     assert misses == 0
+
+
+def test_unbuilt_version_is_maybe_seen_everywhere(spark, tmp_path):
+    """A version that was never written, or was dropped on resume, must not
+    mark anything definitely new: those rows would skip the exact
+    anti-join. Inside a built version, a partition without inserts has no
+    file and its keys are definitely new."""
+    bloom = BloomSidecar(str(tmp_path), PARTS, capacity=4096, fpp=0.01)
+    keys = with_hashes(_urls(spark, 0, 2000), "url", PARTS)
+    assert bloom.prefilter(keys, 0).where(~F.col("maybe_seen")).count() == 0
+    assert bloom.prefilter(keys, -1).where(~F.col("maybe_seen")).count() == 0
+
+    bloom.insert(keys.where(F.col("part") == 3).select("part", "h1", "h2"), None, 0)
+    bloom.insert(keys.where(F.col("part") == 3).select("part", "h1", "h2"), 0, 1)
+    bloom.drop_versions_after(0)
+    assert bloom.prefilter(keys, 1).where(~F.col("maybe_seen")).count() == 0
+
+    # built v=0 holds only part 3: every other part's keys are definitely new
+    definite = bloom.prefilter(keys, 0).where(~F.col("maybe_seen"))
+    assert definite.count() == keys.where(F.col("part") != 3).count()

@@ -11,7 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_german_localpoliticans_spark.config import CrawlConfig
-from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
+from crawler_german_localpoliticans_spark.plans.crawl import (
+    SEEN_BYTES_PER_URL,
+    CrawlDriver,
+    broadcast_threshold,
+    parse_byte_size,
+)
 from crawler_german_localpoliticans_spark.plans.oracle import crawl_oracle
 from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
 
@@ -73,12 +78,59 @@ def assert_exact_match(tables, oracle_res):
     assert mismatched.count() == 0
 
 
-@pytest.mark.parametrize("use_bloom", [True, False])
-def test_smoke_exact_match(spark, smoke_fixture, smoke_dir, tmp_path, use_bloom):
-    config = CrawlConfig(use_bloom_prefilter=use_bloom, seen_partitions=8, shuffle_partitions=8)
+def bloom_versions(work_dir) -> list[str]:
+    bloom_dir = os.path.join(str(work_dir), "bloom")
+    return sorted(n for n in os.listdir(bloom_dir) if n.startswith("v="))
+
+
+@pytest.mark.parametrize("regime", ["default", "always", "crossover"])
+def test_smoke_exact_match(
+    spark, smoke_fixture, smoke_dir, tmp_path, set_broadcast_threshold, regime
+):
+    """Exact parity under each broadcast-threshold regime of the bloom gate:
+    the session default (url_seen always broadcastable: no bloom at all),
+    -1 (live from the seeds) and a threshold crossed at round 1."""
+    config = CrawlConfig(seen_partitions=8, shuffle_partitions=8)
     oracle_res = crawl_oracle(smoke_fixture.seeds, smoke_fixture.pages, smoke_fixture.robots, config)
+    n_seeds = sum(1 for depth, _, _ in oracle_res.crawl_order if depth == 0)
+    if regime == "always":
+        set_broadcast_threshold("-1")
+    elif regime == "crossover":
+        set_broadcast_threshold(f"{n_seeds * SEEN_BYTES_PER_URL}b")
     tables, _ = run_engine(spark, smoke_dir, tmp_path, config)
     assert_exact_match(tables, oracle_res)
+
+    probed = [m["bloom_probed"] for m in tables.metrics]
+    built = [m["bloom_built"] for m in tables.metrics]
+    versions = [m["bloom_version"] for m in tables.metrics]
+    if regime == "default":
+        assert probed == built == [False] * 3 and versions == [-1] * 3
+        assert bloom_versions(tmp_path) == []
+    elif regime == "always":
+        assert probed == [True, True, False] and built == [True, False, False]
+        assert versions == [1, 2, 2]
+        assert bloom_versions(tmp_path) == ["v=000000", "v=000001", "v=000002"]
+    else:
+        assert probed == [False, True, False] and built == [False, True, False]
+        assert versions == [-1, 2, 2]
+        assert bloom_versions(tmp_path) == ["v=000001", "v=000002"]
+
+
+@pytest.mark.parametrize(
+    "value, expected",
+    [("10MB", 10 << 20), ("10485760b", 10485760), ("-1", -1), ("512k", 512 << 10), ("7", 7)],
+)
+def test_parse_byte_size(value, expected):
+    assert parse_byte_size(value) == expected
+
+
+def test_broadcast_threshold_falls_back_to_planner_setting(spark, set_broadcast_threshold):
+    set_broadcast_threshold("2MB")
+    assert broadcast_threshold(spark) == 2 << 20
+    spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+    assert broadcast_threshold(spark) == parse_byte_size(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    )
 
 
 def test_correctness_exact_match(spark, correctness_fixture, correctness_dir, tmp_path):

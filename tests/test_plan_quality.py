@@ -112,9 +112,10 @@ def test_cosine_topk_is_heap_topk_with_arrow_scoring(spark):
 
 
 def test_anti_join_on_url_hash_keys(spark, tmp_path):
-    """The url_seen anti-join shuffles on the join key; bloom-definite rows
-    bypass it entirely (structure asserted via row counts in crawl tests;
-    here: the join itself is a hash join, not BNL/cartesian)."""
+    """The url_seen anti-join is keyed on url: AQE broadcasts url_seen while
+    it is small, and once it outgrows the threshold the bloom's definite-new
+    rows bypass the join (gate asserted in the crawl tests; here: the join
+    itself is a hash join, not BNL/cartesian)."""
     a = spark.range(1000).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
     b = spark.range(500).select(F.concat(F.lit("u"), F.col("id") * 2).alias("url"))
     plan = plan_of(a.join(b, "url", "left_anti"))
