@@ -24,7 +24,7 @@ Design (scale posture first):
   before the test — the crawl driver guarantees bloom(v=r) ⊇ url_seen at
   every round r whose expansion probes (children of round r inserted as
   v=r+1).
-- Scale gate (plans/crawl.py `_bloom_live`): the sidecar only pays once
+- Scale gate (plans/crawl.py `_broadcast_url_cap`): the sidecar only pays once
   url_seen is too big for AQE to broadcast into the exact anti-join, so
   the driver neither probes nor inserts below that size. The first live
   round r builds version r from url_seen(0..r) in one insert; a crawl

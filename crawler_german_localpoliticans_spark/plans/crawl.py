@@ -17,6 +17,13 @@ state (SURVEY.md §3.1 "Spark rebuild lifecycle"):
       ─ exact anti-join vs url_seen
       ─ global seq assignment ─ commit round (checkpoint line)
 
+A wave whose url_seen and candidate links fit under the session's broadcast
+threshold skips the Spark plan for the steps after the fetched write: the
+driver collects the wave's links and url_seen, applies the same dedup, seen
+check and seq order, and writes the next frontier in one job. A seed list
+under the same cap is sequenced the same way (checkpoint key
+`expand_local`; arithmetic in SCALE.md).
+
 Determinism / parity invariants (tests/test_crawl_spark.py asserts all of
 them against plans/oracle.py on shared fixtures):
 - round == BFS depth; expansion commits only after the *whole* wave is
@@ -46,8 +53,10 @@ Scale posture (local[32] here, 1000 executors at 10^10 URLs):
   bloom is neither probed nor maintained. The first round past the
   threshold builds bloom version r from url_seen(0..r) once; every later
   round probes and inserts (arithmetic in SCALE.md);
-- no collect() on data paths — only tiny aggregates (counts, bucket
-  offsets, robots policies) reach the driver.
+- no unbounded collect() — tiny aggregates (counts, bucket offsets) reach
+  the driver, and data rows only for waves within the broadcast cap
+  (≈109k URLs at the default 10 MiB); every larger wave, and every wave at
+  10^10 scale, takes the distributed path above.
 """
 
 from __future__ import annotations
@@ -65,6 +74,7 @@ from pyspark.sql import types as T
 from ..config import CrawlConfig, DEFAULT_CONFIG
 from ..functions import udfs
 from ..functions.robots import parse_robots
+from ..functions.urls import canonicalize_url, host_key, url_host
 from ..sources import tables as tbl
 from .bloom import BloomSidecar, with_hashes
 from .checkpoint import CheckpointLog, partition_lineage
@@ -260,38 +270,92 @@ class CrawlDriver:
         n_policy_hosts = self.policies_df.count()
         self.broadcast_policies = n_policy_hosts <= config.broadcast_policies_max_hosts
 
-    def _bloom_live(self, next_seq: int) -> bool:
-        """Whether an expansion with `next_seq` URLs sequenced so far probes
-        and maintains the bloom. `next_seq` bounds |url_seen| from above, so
-        below the broadcast threshold AQE broadcasts url_seen into the exact
-        anti-join and a prefilter would save that join nothing."""
+    def _broadcast_url_cap(self) -> int:
+        """How many URLs fit under the session's broadcast threshold at
+        SEEN_BYTES_PER_URL each; -1 when AQE never broadcasts. Up to the cap
+        AQE broadcasts url_seen into the exact anti-join, so the bloom would
+        save that join nothing, and a wave's inputs are small enough to
+        sequence on the driver."""
         threshold = broadcast_threshold(self.spark)
-        return threshold <= 0 or next_seq * SEEN_BYTES_PER_URL > threshold
+        return threshold // SEEN_BYTES_PER_URL if threshold > 0 else -1
+
+    def _write_frontier(self, r: int, urls: list[str], base: int) -> None:
+        """Frontier round r from URLs already in crawl order, in one job and
+        one file (at most the broadcast cap of rows)."""
+        rows = [(base + i, u, r, url_host(u), host_key(u)) for i, u in enumerate(urls)]
+        df = self.spark.createDataFrame(
+            self.spark.sparkContext.parallelize(rows, 1), tbl.FRONTIER_SCHEMA
+        )
+        self.catalog.write_round("frontier", r, df)
 
     # ------------------------------------------------------------------ seeds
-    def _seed_frontier(self, seeds_df: DataFrame) -> tuple[DataFrame, int]:
-        """raw seeds -> (depth-0 frontier, seed count); invalid URLs skipped
-        (seeder.rs:55-60); duplicates preserved (seeder does not dedup).
-        The count rides out of the seq assignment's bucket-count pass
-        (assign_global_seq_counted) so run() never pays a separate count()
-        job over the frontier."""
+    def _seed_frontier(self, seeds_df: DataFrame) -> int:
+        """raw seeds -> frontier round 0 (written); returns the seed count.
+        Invalid URLs are skipped (seeder.rs:55-60); duplicates are preserved
+        (the seeder does not dedup).
+
+        A seed list within the broadcast cap is sequenced on the driver: one
+        bounded collect, the row functions the UDFs wrap, one write. A
+        larger one takes the distributed seq assignment, whose bucket-count
+        pass also yields the count (no separate count() job)."""
+        cap = self._broadcast_url_cap()
+        if cap >= 0:
+            raw = seeds_df.select("raw_url", "seed_order").limit(cap + 1).collect()
+            if len(raw) <= cap:
+                urls = [
+                    canonicalize_url(row["raw_url"]) if row["raw_url"] is not None else None
+                    for row in sorted(raw, key=lambda row: row["seed_order"])
+                ]
+                urls = [u for u in urls if u is not None]
+                self._write_frontier(0, urls, 0)
+                return len(urls)
+        # one seed_normalize pass shared by the bounds collect, the
+        # bucket-count collect and the frontier write
         seeded = (
             seeds_df.withColumn("url", udfs.seed_normalize(F.col("raw_url")))
             .where(F.col("url").isNotNull())
+            .persist()
         )
-        seeded, n_seeds = assign_global_seq_counted(
+        sequenced, n_seeds = assign_global_seq_counted(
             seeded, ["seed_order"], base=0, buckets=self.config.shuffle_partitions
         )
-        return (
-            seeded.select(
+        self.catalog.write_round(
+            "frontier",
+            0,
+            sequenced.select(
                 "seq",
                 "url",
                 F.lit(0).cast("int").alias("depth"),
                 udfs.url_host(F.col("url")).alias("host"),
                 udfs.host_key(F.col("url")).alias("host_key"),
             ),
-            n_seeds,
         )
+        seeded.unpersist()
+        return n_seeds
+
+    def _expand_local(self, wave: DataFrame, r: int, next_seq: int) -> int:
+        """Step 6 on the driver for a wave under the broadcast cap: the
+        distributed path's first-discovery-wins dedup, seen check and seq
+        order over one collect of the wave's links and one of url_seen,
+        then frontier r+1 in one write. Returns the enqueued count."""
+        first: dict[str, tuple[int, int]] = {}
+        parents = wave.where(F.col("ok")).select("seq", "found_links").collect()
+        for row in sorted(parents, key=lambda row: row["seq"]):
+            for pos, url in enumerate(row["found_links"]):
+                first.setdefault(url, (row["seq"], pos))  # min (parent_seq, pos)
+        frontier = self.catalog.read_rounds("frontier", list(range(r + 1)), tbl.FRONTIER_SCHEMA)
+        if r == 0:
+            # the round-0 seed quirk (see the distributed path in
+            # _run_round): keep iff parent_seq < min(seed_seq of the url)
+            seed_seq: dict[str, int] = {}
+            for row in frontier.select("url", "seq").collect():
+                seed_seq[row["url"]] = min(row["seq"], seed_seq.get(row["url"], row["seq"]))
+            new = [(k, u) for u, k in first.items() if u not in seed_seq or k[0] < seed_seq[u]]
+        else:
+            seen = {row["url"] for row in frontier.select("url").collect()}
+            new = [(k, u) for u, k in first.items() if u not in seen]
+        self._write_frontier(r + 1, [u for _, u in sorted(new)], next_seq)
+        return len(new)
 
     # ------------------------------------------------------------------ wave
     def _run_round(self, r: int, next_seq: int, bloom_version: int) -> dict:
@@ -422,10 +486,18 @@ class CrawlDriver:
         #    AQE is also what converts the seen/seed anti-joins to
         #    broadcast at runtime; without it they fall back to shuffle
         #    joins that cost more than the saved scheduling latency.
+        #    A wave whose inputs (url_seen ≤ next_seq URLs, `candidates`
+        #    links) fit under the broadcast cap expands on the driver
+        #    instead; that also means the bloom is not live.
         enqueued = 0
         new_bloom_version = bloom_version
         bloom_live = bloom_built = False
-        if r < cfg.max_depth:
+        cap = self._broadcast_url_cap()
+        expand_local = r < cfg.max_depth and max(next_seq, metrics["candidates"]) <= cap
+        if expand_local:
+            enqueued = self._expand_local(wave, r, next_seq)
+            new_bloom_version = -1
+        elif r < cfg.max_depth:
             candidates = wave.where(F.col("ok")).select(
                 F.col("seq").alias("parent_seq"),
                 F.posexplode("found_links").alias("pos", "child_url"),
@@ -449,7 +521,7 @@ class CrawlDriver:
             # the bloom keeps the invariant "version r ≡ url_seen of
             # frontier rounds 0..r"; the first live round (or a resume that
             # crosses the threshold) builds version r from url_seen once
-            bloom_live = self._bloom_live(next_seq)
+            bloom_live = next_seq > cap
             bloom_built = bloom_live and bloom_version != r
             if bloom_built:
                 seen_r = with_hashes(seen.distinct(), "url", cfg.seen_partitions)
@@ -519,6 +591,7 @@ class CrawlDriver:
         metrics["enqueued"] = enqueued
         metrics["next_seq"] = next_seq + enqueued
         metrics["bloom_version"] = new_bloom_version
+        metrics["expand_local"] = expand_local
         metrics["bloom_probed"] = bloom_live
         metrics["bloom_built"] = bloom_built
         metrics["wall_s"] = round(time.monotonic() - t0, 3)
@@ -554,9 +627,7 @@ class CrawlDriver:
             for t in ("frontier", "fetched"):
                 cat.drop_rounds_after(t, -1)
             self.bloom.drop_versions_after(-1)
-            frontier0, n_seeds = self._seed_frontier(seeds_df)
-            cat.write_round("frontier", 0, frontier0)
-            next_seq = n_seeds
+            next_seq = self._seed_frontier(seeds_df)
             bloom_version = -1  # never built; a live round 0 builds v=0
             start_round = 0
 

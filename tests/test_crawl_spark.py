@@ -83,13 +83,30 @@ def bloom_versions(work_dir) -> list[str]:
     return sorted(n for n in os.listdir(bloom_dir) if n.startswith("v="))
 
 
-@pytest.mark.parametrize("regime", ["default", "always", "crossover"])
+def local_crossover_threshold(oracle_res) -> str:
+    """A broadcast threshold that keeps round 0's expansion on the driver
+    and sends round 1's to the distributed path. The gate compares a
+    round's max(next_seq, candidates) with the cap."""
+    fetched = oracle_res.fetched
+    sizes = [
+        max(
+            sum(1 for f in fetched if f.depth <= r),
+            sum(len(f.found_links) for f in fetched if f.depth == r),
+        )
+        for r in (0, 1)
+    ]
+    assert sizes[0] < sizes[1]
+    return f"{sizes[0] * SEEN_BYTES_PER_URL}b"
+
+
+@pytest.mark.parametrize("regime", ["default", "always", "crossover", "local_crossover"])
 def test_smoke_exact_match(
     spark, smoke_fixture, smoke_dir, tmp_path, set_broadcast_threshold, regime
 ):
-    """Exact parity under each broadcast-threshold regime of the bloom gate:
-    the session default (url_seen always broadcastable: no bloom at all),
-    -1 (live from the seeds) and a threshold crossed at round 1."""
+    """Exact parity under each broadcast-threshold regime: the session
+    default (every wave expands on the driver, no bloom at all), -1 (no
+    local wave, bloom live from the seeds), a bloom gate crossed at round 1,
+    and a local round 0 followed by a distributed round 1."""
     config = CrawlConfig(seen_partitions=8, shuffle_partitions=8)
     oracle_res = crawl_oracle(smoke_fixture.seeds, smoke_fixture.pages, smoke_fixture.robots, config)
     n_seeds = sum(1 for depth, _, _ in oracle_res.crawl_order if depth == 0)
@@ -97,20 +114,32 @@ def test_smoke_exact_match(
         set_broadcast_threshold("-1")
     elif regime == "crossover":
         set_broadcast_threshold(f"{n_seeds * SEEN_BYTES_PER_URL}b")
+    elif regime == "local_crossover":
+        set_broadcast_threshold(local_crossover_threshold(oracle_res))
     tables, _ = run_engine(spark, smoke_dir, tmp_path, config)
     assert_exact_match(tables, oracle_res)
 
+    local = [m["expand_local"] for m in tables.metrics]
     probed = [m["bloom_probed"] for m in tables.metrics]
     built = [m["bloom_built"] for m in tables.metrics]
     versions = [m["bloom_version"] for m in tables.metrics]
     if regime == "default":
+        assert local == [True, True, False]
         assert probed == built == [False] * 3 and versions == [-1] * 3
         assert bloom_versions(tmp_path) == []
+    elif regime == "local_crossover":
+        # round 1 is past the cap on next_seq alone, so its bloom goes live
+        assert local == [True, False, False]
+        assert probed == [False, True, False] and built == [False, True, False]
+        assert versions == [-1, 2, 2]
+        assert bloom_versions(tmp_path) == ["v=000001", "v=000002"]
     elif regime == "always":
+        assert local == [False] * 3
         assert probed == [True, True, False] and built == [True, False, False]
         assert versions == [1, 2, 2]
         assert bloom_versions(tmp_path) == ["v=000000", "v=000001", "v=000002"]
     else:
+        assert local == [False] * 3
         assert probed == [False, True, False] and built == [False, True, False]
         assert versions == [-1, 2, 2]
         assert bloom_versions(tmp_path) == ["v=000001", "v=000002"]
@@ -183,6 +212,7 @@ def test_metrics_recorded(spark, smoke_dir, tmp_path):
         assert m["scheduled"] > 0
         assert "lineage" in m and "politeness" in m
         assert set(m["lineage"]) == {"fetched", "frontier_next"}
+        assert isinstance(m["expand_local"], bool)
         assert m["wall_s"] >= 0
     # one output table per round: extracted is a projection of fetched
     assert not os.path.exists(os.path.join(str(tmp_path), "extracted"))

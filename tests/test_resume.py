@@ -9,7 +9,7 @@ import os
 import shutil
 
 from pyspark.sql import functions as F
-from test_crawl_spark import assert_exact_match
+from test_crawl_spark import assert_exact_match, local_crossover_threshold
 
 from crawler_german_localpoliticans_spark.config import CrawlConfig
 from crawler_german_localpoliticans_spark.plans.bloom import with_hashes
@@ -141,3 +141,37 @@ def test_bloom_crossover_mid_crawl_and_resume_across_it(
         with open(ckpt) as f:
             assert [json.loads(line)["bloom_version"] for line in f] == [-1, 2, 3, 3]
         assert_bloom_covers_seen(resumed, config)
+
+
+def test_local_expansion_crossover_and_resume_across_it(
+    spark, smoke_fixture, smoke_dir, tmp_path, set_broadcast_threshold
+):
+    """Round 0 expands on the driver, round 1 on the distributed path. The
+    tables equal the oracle's and a never-local run's byte for byte, and so
+    do the tables of a run resumed from "round 0 committed"."""
+    config = CrawlConfig(seen_partitions=8, shuffle_partitions=8)
+    robots = read_robots(spark, f"{smoke_dir}/robots.parquet")
+    seeds = seeds_from_table(spark.read.parquet(f"{smoke_dir}/seeds.parquet"))
+    pages = f"{smoke_dir}/pages.parquet"
+    oracle_res = crawl_oracle(smoke_fixture.seeds, smoke_fixture.pages, smoke_fixture.robots, config)
+
+    set_broadcast_threshold("-1")
+    never = CrawlDriver(spark, str(tmp_path / "never"), pages, robots, config)
+    expected = all_rows(never.run(seeds))
+
+    set_broadcast_threshold(local_crossover_threshold(oracle_res))
+    cross_dir = str(tmp_path / "crossover")
+    tables = CrawlDriver(spark, cross_dir, pages, robots, config).run(seeds)
+    assert_exact_match(tables, oracle_res)
+    assert all_rows(tables) == expected
+    assert [m["expand_local"] for m in tables.metrics] == [True, False, False]
+
+    ckpt = os.path.join(cross_dir, "checkpoints.jsonl")
+    with open(ckpt) as f:
+        lines = f.readlines()
+    with open(ckpt, "w") as f:
+        f.write(lines[0])
+    resumed = CrawlDriver(spark, cross_dir, pages, robots, config)
+    assert all_rows(resumed.run(resume=True)) == expected
+    with open(ckpt) as f:
+        assert [json.loads(line)["expand_local"] for line in f] == [True, False, False]

@@ -41,19 +41,63 @@ def test_seed_csv_to_frontier_order(spark, smoke_dir, smoke_fixture, tmp_path):
     from crawler_german_localpoliticans_spark.config import CrawlConfig
     from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
     from crawler_german_localpoliticans_spark.sources.seeds import read_seeds_csv
-    from crawler_german_localpoliticans_spark.sources.tables import read_robots
+    from crawler_german_localpoliticans_spark.sources.tables import FRONTIER_SCHEMA, read_robots
 
     robots = read_robots(spark, f"{smoke_dir}/robots.parquet")
     d = CrawlDriver(
         spark, str(tmp_path), f"{smoke_dir}/pages.parquet", robots, CrawlConfig(seen_partitions=8)
     )
     csv_seeds = read_seeds_csv(spark, f"{smoke_dir}/seeds.csv", column_name="Websites")
-    f0 = d._seed_frontier(csv_seeds)[0].orderBy("seq").collect()
+    d._seed_frontier(csv_seeds)
+    f0 = d.catalog.read_round("frontier", 0, FRONTIER_SCHEMA).orderBy("seq").collect()
     from crawler_german_localpoliticans_spark.functions.urls import canonicalize_url as canon
 
     expected = [canon(s) for s in smoke_fixture.seeds if canon(s) is not None]
     assert [r["url"] for r in f0] == expected
     assert [r["seq"] for r in f0] == list(range(len(expected)))
+
+
+def test_seed_cap_boundary_gives_same_frontier(
+    spark, smoke_dir, smoke_fixture, tmp_path, set_broadcast_threshold, monkeypatch
+):
+    """A seed list of exactly the broadcast cap is sequenced on the driver;
+    one row over, it takes the distributed seq assignment. Both write the
+    same frontier 0, invalid and duplicate seeds included."""
+    from crawler_german_localpoliticans_spark.config import CrawlConfig
+    from crawler_german_localpoliticans_spark.plans import crawl
+    from crawler_german_localpoliticans_spark.sources.tables import FRONTIER_SCHEMA, read_robots
+
+    raw = smoke_fixture.seeds[:2] + ["http://", None] + smoke_fixture.seeds[2:] + [" "]
+    assert len(set(raw)) < len(raw)  # the fixture repeats a seed
+    seeds_df = spark.createDataFrame(
+        list(zip(raw, range(len(raw)))), "raw_url string, seed_order long"
+    )
+    distributed = []
+    seq_counted = crawl.assign_global_seq_counted
+
+    def counted(*args, **kwargs):
+        distributed.append(True)
+        return seq_counted(*args, **kwargs)
+
+    monkeypatch.setattr(crawl, "assign_global_seq_counted", counted)
+    robots = read_robots(spark, f"{smoke_dir}/robots.parquet")
+    d = crawl.CrawlDriver(
+        spark, str(tmp_path), f"{smoke_dir}/pages.parquet", robots, CrawlConfig(seen_partitions=8)
+    )
+
+    frontiers = []
+    for cap in (len(raw), len(raw) - 1):
+        set_broadcast_threshold(f"{cap * crawl.SEEN_BYTES_PER_URL}b")
+        n_seeds = d._seed_frontier(seeds_df)
+        rows = d.catalog.read_round("frontier", 0, FRONTIER_SCHEMA).orderBy("seq").collect()
+        assert n_seeds == len(rows)
+        frontiers.append([tuple(r) for r in rows])
+    assert distributed == [True]  # the second call only
+    assert frontiers[0] == frontiers[1]
+    expected = [canonicalize_url(s) for s in raw if s is not None and canonicalize_url(s) is not None]
+    assert [r[1] for r in frontiers[0]] == expected
+    assert [r[0] for r in frontiers[0]] == list(range(len(expected)))
+    assert len(expected) == len(raw) - 3
 
 
 # ------------------------------------------------------------- properties
