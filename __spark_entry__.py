@@ -30,57 +30,15 @@ GATE_WORDS = ("join", "filter", "window")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents table, spread across the session's cores.
+    """documents table for per-document kernels (see sources.tables.spread_scan)."""
+    from crawler_german_localpoliticans_spark.sources.tables import spread_scan
 
-    The testdata parquet is ONE file with ONE row group, so the scan — and
-    with it every per-document kernel Spark fuses into the scan stage
-    (regexp Columns, Arrow UDFs, explodes feeding a shuffle) — would run as
-    a SINGLE task regardless of core count (guide §2.2/§6: the row group is
-    the parallelism unit). One cheap round-robin exchange of the small text
-    table up front unlocks the whole session's parallelism for the heavy
-    per-doc work. Scale-adaptive: the target is defaultParallelism (== the
-    session's core count on local[N], cluster cores otherwise), never a
-    constant; on a production multi-file table whose scan already yields
-    >= that many splits this exchange is unnecessary — there the read is
-    split-parallel and callers would drop the repartition — but for the
-    driver-contract single-file inputs it is the difference between 1 and
-    N cores on the per-doc-kernel queries (measured at sf1.0, local[32],
-    min-of-2: pii_scrub 5.6s -> 1.1s, fingerprint 5.3s -> 0.9s,
-    contamination 22.8s -> 5.2s, bigram_lm 12.8s -> 4.8s).
-
-    `_docs_raw` keeps the raw single-task scan for queries whose whole
-    plan is one cheap column pass + an aggregation with map-side partial
-    agg (exact_dedup, source_mix, hash_split): there the exchange ships
-    the text for no parallel work worth having and is a pure regression
-    (measured exact_dedup 0.43s -> 1.5s with the spread)."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return df.repartition(spark.sparkContext.defaultParallelism)
+    return spread_scan(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unspread documents scan — see _docs' spread rationale."""
+    """documents table for one cheap column pass + aggregation: never spread."""
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _fit_scan_splits(spark: SparkSession, *paths: str) -> None:
-    """Size spark.sql.files.maxPartitionBytes so the LARGEST input among
-    `paths` splits into ~defaultParallelism scan tasks (guide §6): the
-    driver-contract tables are single files, and the default 128 MB split
-    leaves e.g. the sf1.0 lineitem scan (131 MB, 6M rows) on 2 tasks of a
-    32-core session. Scale-adaptive by construction — split = max(input
-    size / cores, 4 MB floor), so a production-sized table yields splits
-    at least as large as the default and the setting degenerates to a
-    no-op; parallelism is still capped by the file's row-group count
-    (the real fix at scale is writing more row groups). Runtime-settable
-    conf; cheap to re-set per query."""
-    import os as _os
-
-    biggest = max(_os.path.getsize(p) for p in paths)
-    per_core = biggest // max(spark.sparkContext.defaultParallelism, 1)
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes",
-        str(max(per_core, 4 * 1024 * 1024)),
-    )
 
 
 def _e6(col) -> F.Column:
@@ -392,13 +350,11 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
 
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.similarity import cosine_topk_bruteforce
+    from crawler_german_localpoliticans_spark.sources.tables import spread_scan
 
-    # same single-row-group story as _docs: the Arrow matvec would run in
-    # ONE scan task; spread the vectors first (the top-k itself is
-    # TakeOrderedAndProject — per-partition heaps, no global sort)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # the Arrow matvec is the per-row kernel; the top-k itself is
+    # TakeOrderedAndProject (per-partition heaps, no global sort)
+    emb = spread_scan(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
     q = _query_vec(spark, sf_dir)
     topk = cosine_topk_bruteforce(emb, "vec_id", "embedding", q, k=10)
     return topk.select("id", _e6(F.col("score")).alias("score_e6"))
@@ -741,7 +697,6 @@ def _q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _fit_scan_splits(spark, f"{sf_dir}/lineitem.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
@@ -758,7 +713,6 @@ def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_volume_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _fit_scan_splits(spark, f"{sf_dir}/lineitem.parquet")
     c = spark.read.parquet(f"{sf_dir}/customer.parquet")
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -830,8 +784,8 @@ def _q_url_normalize_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_robots_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exercises the flagship robots path: policies parsed on executors as a
-    DataFrame, picked up via the size-guarded host_key join (never a driver
-    dict), longest-prefix match in one Arrow batch."""
+    DataFrame, picked up via a host_key join the planner sizes (never a
+    driver dict), longest-prefix match in one Arrow batch."""
     from crawler_german_localpoliticans_spark.config import DEFAULT_CONFIG
     from crawler_german_localpoliticans_spark.functions import udfs
     from crawler_german_localpoliticans_spark.plans.crawl import (
@@ -1096,7 +1050,6 @@ def _q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _fit_scan_splits(spark, f"{sf_dir}/lineitem.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.rollup("l_returnflag", "l_linestatus")

@@ -31,10 +31,6 @@ class CrawlConfig:
     # partitions of the url_seen table / bloom sidecar; at 1e10 URLs raise to
     # O(10k) so each partition's filter (~1.2 GB total at 1% FPR) stays small
     seen_partitions: int = 32
-    # robots policies ship as a JOIN against the frontier: broadcast below
-    # this many distinct hosts, shuffle join (AQE-managed) above — the driver
-    # never holds the policy set either way
-    broadcast_policies_max_hosts: int = 1_000_000
     bloom_capacity_per_partition: int = 1 << 17
     bloom_fpp: float = 0.01
     # politeness wave-slicing: when >0, each BFS depth wave is fetched in

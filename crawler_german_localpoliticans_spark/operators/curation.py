@@ -180,8 +180,7 @@ def _bench_gram_join_side(
     n: int,
     broadcast_max_grams: int | None,
 ) -> DataFrame:
-    """Self-defending join side (the robots-join pattern,
-    plans/crawl.py evaluate_robots): COUNT the distinct benchmark gram set
+    """Self-defending join side: COUNT the distinct benchmark gram set
     once, broadcast it only when it is provably small, otherwise hand
     Catalyst the un-hinted side so the gram join shuffles on gram_hash and
     per-task memory stays O(grams/P). The gram set is persisted so the

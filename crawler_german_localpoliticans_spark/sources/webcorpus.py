@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import spread_scan
+
 N_LINKS = 8
 BASE_TS = "2025-01-01 00:00:00"
 
@@ -39,13 +41,10 @@ def corpus_from_documents(spark: SparkSession, sf_dir: str, max_docs: int | None
         docs = docs.where(F.col("doc_id") < max_docs)
     n = docs.count()
     # the html/url/anchor derivation below is a dozen concat/format
-    # expressions per row; the testdata parquet is one row group, so the
-    # whole derivation would run in ONE scan task (r6, same story as
-    # __spark_entry__._docs) — spread it first. Also gives the derived
-    # pages parquet a multi-file layout, so downstream consumers (the
-    # crawl's pages cache) scan in parallel. Row content is unchanged and
-    # every consumer orders explicitly.
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    # expressions per row; a spread scan also writes the derived pages as
+    # many files, so the crawl's pages cache scans in parallel. Row content
+    # is unchanged and every consumer orders explicitly.
+    docs = spread_scan(docs)
     n_hosts = max(4, n // 50)
     did = F.col("doc_id")
 

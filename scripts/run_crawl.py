@@ -62,8 +62,11 @@ def main() -> None:
     from crawler_german_localpoliticans_spark.sources.seeds import read_seeds_csv
     from crawler_german_localpoliticans_spark.sources.tables import read_robots
 
+    # the distributed seq assignment's range-bucket count follows the
+    # session's shuffle partitions (spark-submit --conf or the flag above)
     config = CrawlConfig(
         max_depth=args.max_depth,
+        shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
         politeness_delay_ms=args.politeness_ms,
         salt_buckets=args.salt_buckets,
         seen_partitions=args.seen_partitions,

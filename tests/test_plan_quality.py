@@ -124,8 +124,9 @@ def test_anti_join_on_url_hash_keys(spark, tmp_path):
 
 def test_robots_policies_join_scales_past_broadcast(spark):
     """Flagship robots path at 10^5 synthetic hosts: the policy set never
-    reaches the driver — evaluate_robots is a JOIN (broadcast below the size
-    guard, shuffle hash join above it), and results are exact either way."""
+    reaches the driver — evaluate_robots is a JOIN the planner sizes against
+    the session's broadcast threshold (broadcast under it, shuffle join with
+    broadcasting off), and results are exact either way."""
     from crawler_german_localpoliticans_spark.config import DEFAULT_CONFIG
     from crawler_german_localpoliticans_spark.plans.crawl import (
         evaluate_robots,
@@ -145,18 +146,77 @@ def test_robots_policies_join_scales_past_broadcast(spark):
         F.concat(F.lit("https://h"), F.col("id"), F.lit(".de")).alias("host_key"),
         F.col("id"),
     )
-    for broadcast in (True, False):
-        out = evaluate_robots(frontier, policies, broadcast=broadcast)
-        plan = plan_of(out)
-        assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
-        if broadcast:
-            assert "BroadcastHashJoin" in plan
+
+    def evaluate():
+        out = evaluate_robots(frontier, policies)
         rows = out.select("id", "robots_blocked", "crawl_delay_ms").collect()
-        assert len(rows) == len(range(0, n_hosts, 7))
-        for r in rows:
-            expect_blocked = r["id"] % 3 == 0
-            assert r["robots_blocked"] == expect_blocked, r
-            assert r["crawl_delay_ms"] == (2000 if expect_blocked else None), r
+        plan = plan_of(out)  # the final adaptive plan, after the collect
+        assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
+        return plan, sorted(rows)
+
+    plan, broadcast_rows = evaluate()
+    assert "BroadcastHashJoin" in plan
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        plan, shuffle_rows = evaluate()
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "BroadcastHashJoin" not in plan
+    assert shuffle_rows == broadcast_rows
+    assert len(broadcast_rows) == len(range(0, n_hosts, 7))
+    for r in broadcast_rows:
+        expect_blocked = r["id"] % 3 == 0
+        assert r["robots_blocked"] == expect_blocked, r
+        assert r["crawl_delay_ms"] == (2000 if expect_blocked else None), r
+
+
+def test_spread_scan_spreads_a_single_file_scan_once_without_a_job(spark):
+    from crawler_german_localpoliticans_spark.sources.tables import spread_scan
+
+    sc = spark.sparkContext
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")  # schema read: may run a job
+    group = "test-spread-scan-starts-no-job"
+    sc.setJobGroup(group, group)
+    try:
+        spread = spread_scan(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    plan = plan_of(spread)
+    assert plan.count("RoundRobinPartitioning(") == 1
+    assert f"RoundRobinPartitioning({sc.defaultParallelism})" in plan
+
+
+def test_spread_scan_leaves_a_multi_file_scan_alone(spark, tmp_path):
+    from crawler_german_localpoliticans_spark.sources.tables import spread_scan
+
+    n = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "documents.parquet")
+    spark.read.parquet(f"{SF_DIR}/documents.parquet").repartition(n).write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert len(docs.inputFiles()) >= n
+    assert "Exchange" not in plan_of(spread_scan(docs))
+
+
+def test_lineitem_queries_leave_split_size_conf_alone(spark):
+    """The registry's lineitem scans leave the session's split size as they
+    found it: a query never re-tunes what later queries read with."""
+    import __spark_entry__ as entrymod
+
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    registry = entrymod.queries()
+    for name in ("pricing_summary", "volume_by_nation", "rollup_pricing"):
+        assert registry[name](spark, SF_DIR).collect()
+        assert spark.conf.get(key) == before, name
 
 
 def test_extraction_stage_prunes_payload_columns(spark, smoke_dir):
