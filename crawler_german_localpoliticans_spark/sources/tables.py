@@ -163,8 +163,7 @@ class Catalog:
 
 
 def spread_scan(df: DataFrame) -> DataFrame:
-    """`df` round-robined to defaultParallelism partitions when its scan has
-    fewer input files than that; `df` unchanged otherwise.
+    """`df` round-robined to defaultParallelism partitions.
 
     A parquet row group is the scan's unit of parallelism, and the testdata
     tables are ONE file with ONE row group: the scan, and every per-row
@@ -173,20 +172,18 @@ def spread_scan(df: DataFrame) -> DataFrame:
     core count. One cheap round-robin exchange up front unlocks the
     session's parallelism for that work (measured at sf1.0, local[32],
     min-of-2: pii_scrub 5.6 s -> 1.1 s, fingerprint 5.3 s -> 0.9 s,
-    contamination 22.8 s -> 5.2 s, bigram_lm 12.8 s -> 4.8 s). A table
-    written as at least defaultParallelism files already scans in parallel
-    and gets no exchange.
+    contamination 22.8 s -> 5.2 s, bigram_lm 12.8 s -> 4.8 s).
 
-    The check reads the file listing the scan already holds
-    (`inputFiles`): no Spark job, any filesystem. Blind spot (SCALE.md):
-    a single large file with many row groups is still spread.
+    The spread is unconditional: a scan that already reads in parallel
+    (many files or row groups) pays one exchange of its columns (SCALE.md
+    "Scan spread"). No benchmark workload reads such a layout, so nothing
+    measures a rule that would skip it.
 
     Call it only where per-row work downstream is heavy. A scan feeding one
     cheap column pass into a map-side partial aggregation (exact_dedup,
     source_mix, hash_split, a row count) pays the exchange for nothing
     (measured exact_dedup 0.43 s -> 1.5 s with the spread)."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n) if len(df.inputFiles()) < n else df
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
